@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Large-k batched-BPE training soak (VERDICT r14 #3): the declared
   * `bpe_vocab_batched` query gates correctness at k=8; this measures
   * the SCALE claim — that [[graft.operators.Bpe.trainBatched]] learns
@@ -20,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   *    batches fill, but the number is corpus-dependent, so it is
   *    reported rather than gated.
   *
-  * `SPARK_GRAFT_BPE_AMP=N` (N > 1) trains on the ChainSoak-amplified
+  * `SPARK_GRAFT_BPE_AMP=N` (N > 1) trains on the soak-amplified
   * corpus instead of the raw fixture (VERDICT r16 #6 — the
   * production-shaped-k run): the fixture's synthetic text dries out
   * at ~91 learnable merges, far below a real tokenizer's k, while the
@@ -36,25 +34,10 @@ import org.apache.spark.sql.SparkSession
   */
 object BpeSoak {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val k = sys.env.get("SPARK_GRAFT_BPE_K").flatMap(_.toIntOption)
-      .getOrElse(256)
-    val m = sys.env.get("SPARK_GRAFT_BPE_M").flatMap(_.toIntOption)
-      .getOrElse(32)
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName("graft-bpe-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val amp = sys.env.get("SPARK_GRAFT_BPE_AMP").flatMap(_.toIntOption)
-      .getOrElse(1)
+    val sfDir = Harness.sfDir("sf0.1")
+    val (k, m, amp) =
+      (Harness.conf.bpeK, Harness.conf.bpeM, Harness.conf.bpeAmp)
+    val spark = Harness.session(Harness.cpus(16))
     val base = Tables.t(spark, sfDir, "documents")
     // Amplified corpora are materialized to a temp table so every
     // training round reads a stable parquet scan (the memoized
@@ -64,7 +47,7 @@ object BpeSoak {
     val (docs, key) = tmp match {
       case None => (base, sfDir)
       case Some(dir) =>
-        ChainSoak.amplifiedDocs(base, amp, dupCopies = 1)
+        Harness.amplifiedDocs(base, amp, dupCopies = 1)
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
         (Tables.t(spark, dir, "documents"), dir)
     }
@@ -95,6 +78,6 @@ object BpeSoak {
       s""""sec":${math.round(sec * 10) / 10.0},"sf":"$sfDir"}""")
     operators.Dedup.clearCaches(spark)
     spark.stop()
-    tmp.foreach(d => ChainSoak.deleteRecursively(new java.io.File(d)))
+    tmp.foreach(d => Harness.deleteRecursively(new java.io.File(d)))
   }
 }

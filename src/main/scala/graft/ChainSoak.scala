@@ -1,15 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
-  QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
-  ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
   CartesianProductExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -57,116 +51,13 @@ import org.apache.spark.sql.functions._
   */
 object ChainSoak {
 
-  /** Broadcast ceiling for the plan audit: bounded sides in this chain
-    * (score-value tables, boundary id lists, per-source weights, bucket
-    * offsets, dup-id lists under AQE's own threshold) are KB–MB; the
-    * smallest corpus-sized side (the scrubbed text column at 100×)
-    * is >100 MB. 64 MB cleanly separates the two.
-    */
-  val MaxBroadcastBytes: Long = 64L * 1024 * 1024
-
-  /** Shared with VectorSoak (the embedding-chain counterpart). */
-  private[graft] final class TaskMetricsListener extends SparkListener {
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
-    val peakTaskMem = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peakTaskMem.updateAndGet(v => math.max(v, m.peakExecutionMemory))
-        ()
-      }
-    }
-    def resetPeak(): Unit = peakTaskMem.set(0L)
-    def totals: (Long, Long, Long, Long) =
-      (shuffleRead.get, shuffleWrite.get, memSpill.get, diskSpill.get)
-  }
-
-  /** Every node of an (executed) plan, descending through AQE's
-    * materialized stages and reused exchanges (a plain `collect` stops
-    * at QueryStageExec boundaries) but NOT into InMemoryRelation
-    * children — a cache scan is the stage's input boundary; the plan
-    * behind it was audited when its own stage ran.
-    */
-  def planNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case _ => p.children
-    }
-    p +: kids.flatMap(planNodes)
-  }
-
-  /** Every BroadcastExchange dataSize in an executed plan. */
-  def broadcastSizes(p: SparkPlan): Seq[Long] =
-    planNodes(p).collect {
-      case b: BroadcastExchangeLike =>
-        b.metrics.get("dataSize").map(_.value)
-    }.flatten
-
-  private[graft] def mb(bytes: Long): Double =
-    math.round(bytes / 1024.0 / 1024.0 * 10) / 10.0
-
-  /** Deterministic listener-bus drain, shared by every soak that reads
-    * SparkListener counters: waitUntilEmpty blocks until every queued
-    * task-end event is delivered, so counter snapshots are exact
-    * rather than racing async delivery (ADVICE r9 — the fixed sleep
-    * this replaced was racy under load). listenerBus is private[spark]
-    * at the Scala level but public in bytecode — reflective call, the
-    * standard out-of-package access.
-    */
-  private[graft] def drainListeners(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-      .invoke(bus, java.lang.Long.valueOf(30000L)): Unit
-  }
-
-  /** The mixed-duplication amplified corpus (shared with FaultSoak):
-    * of the `n` copies of each base document, `dupCopies` share the
-    * text verbatim and the rest append a deterministic per-copy token
-    * salt sized to ~0.85× the document's own token count — hard
-    * negatives that inflate candidate generation yet survive dedup.
-    */
-  private[graft] def amplifiedDocs(base0: DataFrame, n: Int,
-      dupCopies: Int): DataFrame = {
-    require(n >= 1, s"amplification factor must be >= 1, got $n")
-    val base = base0.select("doc_id", "text", "lang", "source")
-    val salted = "concat(text, ' ', concat_ws(' ', " +
-      "transform(sequence(1, greatest(8, length(text) div 8)), " +
-      "i -> hex(hash(doc_id, i)))))"
-    (0 until n).map { k =>
-      val c = base.withColumn("doc_id", col("doc_id") + lit(k * 10000000L))
-      if (k < dupCopies) c else c.withColumn("text", expr(salted))
-    }.reduce(_ unionByName _)
-      .withColumn("n_chars", length(col("text")).cast("long"))
-  }
-
   def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val n = sys.env.getOrElse("SPARK_GRAFT_CHAIN_N", "100").toInt
-    val dupCopies = sys.env.getOrElse("SPARK_GRAFT_CHAIN_DUP",
-      (n / 2).toString).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    import Harness._
+    val srcDir = sfDir("sf0.1")
+    val n = conf.chainN
+    val dupCopies = n / 2
+    val spark = session(cpus(32))
+    val stage = new Stages(spark, "chain_stage")
 
     val soakDir = java.nio.file.Files
       .createTempDirectory("graft-chain-soak").toString
@@ -177,36 +68,6 @@ object ChainSoak {
     // budget/mix/pack math sees the salted lengths.
     amplifiedDocs(Tables.t(spark, srcDir, "documents"), n, dupCopies)
       .write.mode("overwrite").parquet(s"$soakDir/documents.parquet")
-
-    // Snapshots are taken at stage ENTRY, after a drain, so jobs run
-    // BETWEEN stage() calls (warm-up counts, driver-side collects) are
-    // excluded from every stage's delta instead of being silently
-    // credited to the next stage.
-    def drain(): Unit = drainListeners(spark)
-    def stage(name: String)(f: => (Long, Seq[SparkPlan])): Long = {
-      drain()
-      listener.resetPeak()
-      val before = listener.totals
-      val t0 = System.nanoTime()
-      val (rows, plans) = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      drain()
-      val after = listener.totals
-      plans.foreach { p =>
-        val big = broadcastSizes(p).filter(_ > MaxBroadcastBytes)
-        require(big.isEmpty,
-          s"stage $name broadcast ${big.map(mb).mkString(",")} MB — a " +
-            s"corpus-sized build side leaked under a broadcast:\n$p")
-      }
-      println(s"""{"metric":"chain_stage","stage":"$name",""" +
-        s""""rows":$rows,"sec":${math.round(sec * 100) / 100.0},""" +
-        s""""shuffle_read_mb":${mb(after._1 - before._1)},""" +
-        s""""shuffle_write_mb":${mb(after._2 - before._2)},""" +
-        s""""spill_mem_mb":${mb(after._3 - before._3)},""" +
-        s""""spill_disk_mb":${mb(after._4 - before._4)},""" +
-        s""""peak_task_mem_mb":${mb(listener.peakTaskMem.get)}}""")
-      rows
-    }
 
     // Invariants are asserted on the plan TREE, not its string form:
     // Spark 4 prints each InMemoryRelation's cached child plan inside
@@ -402,7 +263,7 @@ object ChainSoak {
     val nBins = packed.select("lang", "bin").distinct().count()
 
     val secTotal = (System.nanoTime() - t0All) / 1e9
-    val tot = listener.totals
+    val tot = stage.totals
     println(s"""{"metric":"chain_soak","n_copies":$n,""" +
       s""""dup_copies":$dupCopies,"docs":$nDocs,"pairs":$nPairs,""" +
       s""""clusters":$nClusters,"kept":$nKept,"selected":$nSel,""" +
@@ -418,12 +279,5 @@ object ChainSoak {
     operators.Dedup.clearCaches(spark)
     spark.stop()
     deleteRecursively(new java.io.File(soakDir))
-  }
-
-  /** The amplified corpus is GBs at 200× — don't leave it in /tmp. */
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

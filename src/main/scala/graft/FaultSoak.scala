@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.{Success => TaskSuccess, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Failure-injection determinism soak: the curation chain's sampling,
@@ -59,17 +59,18 @@ object FaultSoak {
     */
   val injected = new AtomicLong
 
+  private val FaultModulo = 3
+
   /** Identity pass-through that kills the FIRST attempt of every
-    * `modulo`-th partition. Deterministic: attempt 0 always dies,
+    * FaultModulo-th partition. Deterministic: attempt 0 always dies,
     * attempt 1 always lives — so with maxFailures ≥ 2 every action
     * over this frame succeeds after real, scheduler-visible retries.
     */
-  private def injectFaults(df: DataFrame, modulo: Int,
-      label: String): DataFrame =
+  private def injectFaults(df: DataFrame, label: String): DataFrame =
     df.mapPartitions { it: Iterator[Row] =>
       val tc = TaskContext.get()
       if (tc != null && tc.attemptNumber() == 0 &&
-          tc.partitionId() % modulo == 0) {
+          tc.partitionId() % FaultModulo == 0) {
         injected.incrementAndGet()
         throw new RuntimeException(
           s"graft-injected-fault [$label] partition ${tc.partitionId()}")
@@ -114,30 +115,21 @@ object FaultSoak {
   }
 
   def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val n = sys.env.getOrElse("SPARK_GRAFT_FAULT_N", "20").toInt
+    val srcDir = Harness.sfDir("sf0.1")
+    val n = Harness.conf.faultN
     val dupCopies = n / 2
-    val modulo = sys.env.getOrElse("SPARK_GRAFT_FAULT_MOD", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus(32)
     // local[K, 4]: four task attempts before the job fails — the
     // cluster default's shape. Plain local[K] is maxFailures 1, where
     // ANY injected fault kills the job instead of retrying.
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus,4]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(cpus, "spark.master" -> s"local[$cpus,4]")
     spark.sparkContext.setLogLevel("ERROR") // retry stack traces are WARN
     val retries = new RetryListener
     spark.sparkContext.addSparkListener(retries)
 
     val soakDir = java.nio.file.Files
       .createTempDirectory("graft-fault-soak").toString
-    ChainSoak.amplifiedDocs(Tables.t(spark, srcDir, "documents"),
+    Harness.amplifiedDocs(Tables.t(spark, srcDir, "documents"),
         n, dupCopies)
       .write.mode("overwrite").parquet(s"$soakDir/documents.parquet")
     val docs = Tables.t(spark, soakDir, "documents")
@@ -153,7 +145,7 @@ object FaultSoak {
     def runChain(tag: String, inject: Boolean)
         : Map[String, (Long, Long, String)] = {
       def tap(df: DataFrame, label: String): DataFrame =
-        if (inject) injectFaults(df, modulo, label) else df
+        if (inject) injectFaults(df, label) else df
       val cacheKey = s"$soakDir/$tag"
       val src = tap(docs, "source")
       val sh = operators.Dedup.docShingles(src, cacheKey = cacheKey)
@@ -184,7 +176,7 @@ object FaultSoak {
     // Every counter snapshot below follows a bus drain: RetryListener
     // events deliver asynchronously, and an undrained snapshot would
     // race late task-ends from the previous phase (ADVICE r9).
-    ChainSoak.drainListeners(spark)
+    Harness.drainListeners(spark)
     val f0 = (injected.get, retries.failed.get, retries.retriedOk.get)
     require(f0 == ((0L, 0L, 0L)),
       s"clean run must see zero faults/retries, got $f0")
@@ -192,7 +184,7 @@ object FaultSoak {
     val t1 = System.nanoTime()
     val faulty = runChain("faulty", inject = true)
     val faultySec = (System.nanoTime() - t1) / 1e9
-    ChainSoak.drainListeners(spark)
+    Harness.drainListeners(spark)
 
     val stages = Seq("kept", "selected", "sampled", "packed")
     stages.foreach { s =>
@@ -226,7 +218,7 @@ object FaultSoak {
     // combine-order-stable, which is exactly why every BATCH operator
     // with an oracle quantizes to integers before summing; the
     // determinism contract covers the integer/decimal outputs.
-    ChainSoak.drainListeners(spark)
+    Harness.drainListeners(spark)
     val streamBase =
       (injected.get, retries.failed.get, retries.retriedOk.get)
     def runStream(tag: String, inject: Boolean): (Long, Long, String) = {
@@ -247,7 +239,7 @@ object FaultSoak {
         .option("checkpointLocation", s"$soakDir/ckpt_$tag")
         .foreachBatch { (b: DataFrame, id: Long) =>
           sink.upsert(
-            if (inject) injectFaults(b, modulo, s"stream-$tag") else b, id)
+            if (inject) injectFaults(b, s"stream-$tag") else b, id)
         }
         .start()
       val day0 = java.time.LocalDate.parse("2021-01-01")
@@ -267,14 +259,14 @@ object FaultSoak {
       digest(spark.read.parquet(storePath))
     }
     val streamClean = runStream("clean", inject = false)
-    ChainSoak.drainListeners(spark)
+    Harness.drainListeners(spark)
     val midStream =
       (injected.get, retries.failed.get, retries.retriedOk.get)
     require(midStream == streamBase,
       s"clean streaming run must see zero faults, got $midStream vs " +
         s"$streamBase")
     val streamFaulty = runStream("faulty", inject = true)
-    ChainSoak.drainListeners(spark)
+    Harness.drainListeners(spark)
     val sInj = injected.get - midStream._1
     val sRetried = retries.retriedOk.get - midStream._3
     println(s"""{"metric":"fault_stream","rows":${streamClean._1},""" +
@@ -299,7 +291,6 @@ object FaultSoak {
     {
       val base3 =
         (injected.get, retries.failed.get, retries.retriedOk.get)
-      graft.functions.GraftFunctions.register(spark)
       val raw = Tables.t(spark, srcDir, "embeddings")
         .select("vec_id", "embedding")
       val NQ = 5
@@ -317,8 +308,7 @@ object FaultSoak {
               col("vec_id") % 3 === (i % 3))
             .withColumn("vec_id",
               col("vec_id") + lit((i + 1) * 10000000L))
-          val b = if (inject) injectFaults(b0, modulo,
-            s"intake-$tag-$i") else b0
+          val b = if (inject) injectFaults(b0, s"intake-$tag-$i") else b0
           streaming.StoreIntake.ivfIntakeBatch(store, s"fs-$tag",
             compactOver = if (manifested) 2 else 0)(b, i.toLong)
         }
@@ -328,7 +318,7 @@ object FaultSoak {
         else digest(spark.read.parquet(s"$store/vectors"))
       }
       val intakeClean = intakeRun("clean", inject = false)
-      ChainSoak.drainListeners(spark)
+      Harness.drainListeners(spark)
       val mid3 =
         (injected.get, retries.failed.get, retries.retriedOk.get)
       require(mid3 == base3,
@@ -341,10 +331,10 @@ object FaultSoak {
         injectFaults(raw.filter(col("vec_id") >= NQ &&
             col("vec_id") % 3 === 0)
           .withColumn("vec_id", col("vec_id") + lit(10000000L)),
-          modulo, "intake-replay"), 0L)
+          "intake-replay"), 0L)
       val intakeReplayed =
         digest(spark.read.parquet(s"$soakDir/ivf_faulty/vectors"))
-      ChainSoak.drainListeners(spark)
+      Harness.drainListeners(spark)
       val iInj = injected.get - mid3._1
       val iRetried = retries.retriedOk.get - mid3._3
       println(s"""{"metric":"fault_intake","rows":${intakeClean._1},""" +
@@ -370,10 +360,10 @@ object FaultSoak {
         (injected.get, retries.failed.get, retries.retriedOk.get)
       val manClean = intakeRun("man-clean", inject = false,
         manifested = true)
-      ChainSoak.drainListeners(spark)
+      Harness.drainListeners(spark)
       val manFaulty = intakeRun("man-faulty", inject = true,
         manifested = true)
-      ChainSoak.drainListeners(spark)
+      Harness.drainListeners(spark)
       val mInj = injected.get - mBase._1
       val mRetried = retries.retriedOk.get - mBase._3
       println(s"""{"metric":"fault_intake_manifested",""" +
@@ -391,6 +381,6 @@ object FaultSoak {
 
     operators.Dedup.clearCaches(spark)
     spark.stop()
-    ChainSoak.deleteRecursively(new java.io.File(soakDir))
+    Harness.deleteRecursively(new java.io.File(soakDir))
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
+import graft.functions.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
 /** Graft-recommended session tuning, applied by every entry point
   * (Bench/Verify/Soak/Smoke/PlanAudit/tests) so timings, correctness
   * runs, and specs all exercise the same execution configuration. A
-  * library user applies the same knobs via `GraftConf.tune(builder)`.
+  * library user applies the same settings via `GraftConf.tune(builder)`
+  * and overrides any of them with a later `.config(key, value)`.
   */
 object GraftConf {
 
@@ -26,21 +28,21 @@ object GraftConf {
   val ObjAggFallbackGroups = 262144
 
   def tune(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK",
-        ObjAggFallbackGroups.toString))
+    // The graft functions resolve by name in every session built here
+    // and in its newSession() and streaming children.
+    b.withExtensions(new GraftExtensions)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        ObjAggFallbackGroups.toString)
       // RocksDB state store: required by transformWithState (the
       // arbitrary-stateful operator StatefulOps builds on) and the
       // recommended provider for production streaming state anyway —
       // off-heap (state size no longer bounded by executor heap) with
-      // incremental changelog checkpointing. SPARK_GRAFT_STATESTORE
-      // overrides (e.g. the HDFS-backed default for deployments that
-      // cannot run RocksDB — pair it with StatefulOps'
-      // mapGroupsWithState fallback).
+      // incremental changelog checkpointing. Deployments that cannot
+      // run RocksDB override the provider after `tune` (DEPLOY.md §1)
+      // and use StatefulOps' mapGroupsWithState fallback.
       .config("spark.sql.streaming.stateStore.providerClass",
-        sys.env.getOrElse("SPARK_GRAFT_STATESTORE",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"))
+        "org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")
       // Changelog checkpointing (r17): by default RocksDB uploads a
       // FULL state snapshot into the checkpoint at every micro-batch
       // commit; with changelog checkpointing each commit persists only
@@ -53,8 +55,7 @@ object GraftConf {
       // unchanged (CheckpointRecoverySpec and the nine declared replay
       // queries gate that on the oracle path).
       .config("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
+        "changelogCheckpointing.enabled", "true")
       // The events table carries INT64 TIMESTAMP(NANOS); reading it
       // requires this legacy flag (Tables.t also sets it defensively,
       // but setting it at session build makes the policy uniform from

@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** N-epoch incremental-curation soak (round 16): `curation_chain_incr`
@@ -45,19 +44,9 @@ import org.apache.spark.sql.functions._
 object IncrSoak {
 
   def main(args: Array[String]): Unit = {
-    val nEpochs = sys.env.getOrElse("SPARK_GRAFT_INCR_EPOCHS", "16").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
+    val nEpochs = Harness.conf.incrEpochs
+    val spark = Harness.session(Harness.cpus(8))
+    val dir = Harness.sfDir("sf0.1")
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-incr-soak").toString
     val docsPath = s"$tmp/docs"
@@ -123,7 +112,7 @@ object IncrSoak {
         streaming.StoreIntake.carryEpochLedger(spark, curSigPath,
           nextPath)
         spark.sql(s"DROP TABLE IF EXISTS $curSigTable")
-        ChainSoak.deleteRecursively(new java.io.File(curSigPath))
+        Harness.deleteRecursively(new java.io.File(curSigPath))
         curSigTable = nextTable
         curSigPath = nextPath
         sigFolds += 1
@@ -239,6 +228,6 @@ object IncrSoak {
 
     operators.Dedup.clearCaches(spark)
     spark.stop()
-    ChainSoak.deleteRecursively(new java.io.File(tmp))
+    Harness.deleteRecursively(new java.io.File(tmp))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints physical plans for scale-sensitive queries so the shapes can be
   * audited (broadcast vs shuffle join, TakeOrderedAndProject vs global
   * sort, pushed filters, single-shuffle aggregates).
@@ -9,16 +7,8 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = Harness.session(4)
+    val dir = Harness.sfDir("sf0.01")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("join_enrich", "limit_head", "window_agg", "token_freq",
         "cosine_topk", "ngram_jaccard", "dedup_exact")

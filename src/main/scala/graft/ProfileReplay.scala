@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-execution/per-batch event collector for [[ProfileReplay]] —
@@ -71,20 +70,9 @@ class ReplayProbe extends StreamingQueryListener {
   */
 object ProfileReplay {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.ReplayProbe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val sfDir = Harness.sfDir("sf0.1")
+    val spark = Harness.session(Harness.cpus(32),
+      "spark.sql.streaming.streamingQueryListeners" -> "graft.ReplayProbe")
     val wanted =
       if (args.nonEmpty) SparkEntry.specs.filter(s => args.contains(s.name))
       else SparkEntry.specs.filter(_.category == "replay")

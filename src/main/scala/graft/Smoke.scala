@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke main mirroring the driver's entry check: run the flagship on
   * sf0.001 and print the row count (driver requires rows > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

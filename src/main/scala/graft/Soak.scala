@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scalability soak for the dedup chain: amplify the documents corpus
@@ -22,20 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object Soak {
   def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val n = sys.env.getOrElse("SPARK_GRAFT_SOAK_N", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI defaults ON like Verify/Bench (ADVICE r5); hatch via env.
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val srcDir = Harness.sfDir("sf0.1")
+    val n = Harness.conf.soakN
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
 
     val soakDir = java.nio.file.Files
       .createTempDirectory("graft-soak").toString
@@ -81,7 +70,7 @@ object Soak {
     val intakeSh = sh.filter(col("doc_id") % 20 === 0)
     val (_, tStoreWrite) = timed {
       operators.Dedup.writeSignatureStore(corpusSh,
-        s"$soakDir/sig_store", "soak_sig_store", buckets = cpus.toInt)
+        s"$soakDir/sig_store", "soak_sig_store", buckets = cpus)
     }
     val (nProbeStore, tProbeStore) = timed {
       operators.Dedup.incrementalNearDupPairs(corpusSh, intakeSh, 4, 5,
@@ -266,7 +255,7 @@ object Soak {
     // which is why ivf_ann's fixture-scale bench number is not the
     // scale story.)
     val NQ = 500
-    val annN = sys.env.getOrElse("SPARK_GRAFT_SOAK_ANN_N", n.toString).toInt
+    val annN = Harness.conf.soakAnnN.getOrElse(n)
     val eBase = Tables.t(spark, srcDir, "embeddings")
       .select("vec_id", "embedding")
     val amplified = (0 until annN).map(k => eBase

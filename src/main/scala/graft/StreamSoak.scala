@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -74,18 +73,9 @@ object StreamSoak {
   }
 
   def main(args: Array[String]): Unit = {
-    val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "120")
-      .toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nBatches = Harness.conf.streamBatches
+    val sfDir = Harness.sfDir("sf0.01")
+    val spark = Harness.session(Harness.cpus(8))
     import spark.implicits._
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-stream-soak").toString
@@ -167,8 +157,7 @@ object StreamSoak {
     // static banded corpus — per-batch wall time must stay flat (a
     // trend up would mean per-batch corpus work is accumulating).
     {
-      val corpusDocs = Tables.t(spark, sys.env.getOrElse(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"), "documents")
+      val corpusDocs = Tables.t(spark, sfDir, "documents")
       val corpusSh = operators.Dedup.docShingles(corpusDocs,
         cacheKey = s"$tmp|streamsoak")
       corpusSh.count()
@@ -271,8 +260,6 @@ object StreamSoak {
     // from-scratch banding of everything fed, the IVF probe plan is
     // still partition-pruned, and per-batch durations stay flat.
     {
-      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-        "/root/testdata/sf0.01")
       val nB = math.max(10, nBatches / 6)
       val NQ = 5
       val raw = Tables.t(spark, sfDir, "embeddings")
@@ -734,6 +721,6 @@ object StreamSoak {
 
     operators.Dedup.clearCaches(spark)
     spark.stop()
-    ChainSoak.deleteRecursively(new java.io.File(tmp))
+    Harness.deleteRecursively(new java.io.File(tmp))
   }
 }

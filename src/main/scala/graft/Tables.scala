@@ -31,10 +31,6 @@ object Tables {
     *   - TimestampType: pass through.
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Every declared query loads through here, so this is the one
-    // choke point that guarantees graft's native functions (norm_tokens
-    // etc. in TextOps fragments) resolve in any session. Idempotent.
-    functions.GraftFunctions.register(spark)
     if (name == "events") {
       // SESSION-WIDE side effect, deliberate: with the conf set, INT64
       // TIMESTAMP(NANOS) columns load as BIGINT instead of Spark 4's

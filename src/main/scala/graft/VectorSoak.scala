@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end EMBEDDING-chain soak at ≥100× amplification (VERDICT r9
@@ -28,54 +27,15 @@ import org.apache.spark.sql.functions._
 object VectorSoak {
 
   def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val n = sys.env.getOrElse("SPARK_GRAFT_VECTOR_N", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new ChainSoak.TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    import Harness._
+    val srcDir = sfDir("sf0.1")
+    val n = conf.vectorN
+    val spark = session(cpus(32))
+    val stage = new Stages(spark, "vector_stage")
 
     val soakDir = java.nio.file.Files
       .createTempDirectory("graft-vector-soak").toString
     val t0All = System.nanoTime()
-
-    def drain(): Unit = ChainSoak.drainListeners(spark)
-    def stage(name: String, extra: String = "")(
-        f: => (Long, Seq[SparkPlan])): Long = {
-      drain()
-      listener.resetPeak()
-      val before = listener.totals
-      val t0 = System.nanoTime()
-      val (rows, plans) = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      drain()
-      val after = listener.totals
-      plans.foreach { p =>
-        val big = ChainSoak.broadcastSizes(p)
-          .filter(_ > ChainSoak.MaxBroadcastBytes)
-        require(big.isEmpty,
-          s"stage $name broadcast ${big.map(ChainSoak.mb).mkString(",")}" +
-            s" MB — a corpus-sized build side leaked:\n$p")
-      }
-      println(s"""{"metric":"vector_stage","stage":"$name",""" +
-        s""""rows":$rows,"sec":${math.round(sec * 100) / 100.0},""" +
-        s""""shuffle_read_mb":${ChainSoak.mb(after._1 - before._1)},""" +
-        s""""shuffle_write_mb":${ChainSoak.mb(after._2 - before._2)},""" +
-        s""""spill_mem_mb":${ChainSoak.mb(after._3 - before._3)},""" +
-        s""""spill_disk_mb":${ChainSoak.mb(after._4 - before._4)},""" +
-        s""""peak_task_mem_mb":${ChainSoak.mb(listener.peakTaskMem.get)}""" +
-        extra + "}")
-      rows
-    }
 
     val base = Tables.t(spark, srcDir, "embeddings")
       .select("vec_id", "embedding")
@@ -172,18 +132,16 @@ object VectorSoak {
     // pass stays bounded at nQueries × nCand pairs (broadcast
     // semi-join; never a corpus-wide exact scan).
     var recallCell = 0.0; var recallAdc = 0.0; var recallRerank = 0.0
-    // Defaults measured on this corpus: the synthetic embeddings are
-    // near-random in 64-d (weak cluster structure), so cell recall
-    // scales roughly with the probed-mass fraction — 0.9 recall@10
-    // costs probing ~half the trained cells here. On clustered
+    // Probe/cell/codebook sizes measured on this corpus: the synthetic
+    // embeddings are near-random in 64-d (weak cluster structure), so
+    // cell recall scales roughly with the probed-mass fraction — 0.9
+    // recall@10 costs probing ~half the trained cells here. On clustered
     // production embeddings the same recall comes far cheaper; what
     // this stage PROVES is the rerank mechanism: raw ADC ranks ~0.05
     // of truth into its top-10, and the exact re-rank over the same
     // probe set recovers the full cell ceiling (equality to within
     // rounding), at a bounded nQueries × nCand exact-distance cost.
-    val P = sys.env.getOrElse("SPARK_GRAFT_RERANK_PROBE", "32").toInt
-    val nCells = sys.env.getOrElse("SPARK_GRAFT_RERANK_CELLS", "64").toInt
-    val nCode = sys.env.getOrElse("SPARK_GRAFT_RERANK_NCODE", "64").toInt
+    val (nProbe, nCells, nCode) = (32, 64, 64)
     // Candidate budget scales with the amplification factor: nCand is
     // a ROW budget, and under exact-copy amplification every distinct
     // base vector drags its ~n identical copies (identical adist, and
@@ -197,8 +155,7 @@ object VectorSoak {
     // (SemDeDup is two stages later in this very chain), so real
     // candidate lists are distinct-dominated and the flat budget is
     // the right default there.
-    val nCand = sys.env.getOrElse("SPARK_GRAFT_RERANK_NCAND",
-      (500 * n).toString).toInt
+    val nCand = 500 * n
     stage("ivfpq_rerank") {
       // Lloyd-trained coarse codebook: trained centroids balance cell
       // mass — the production lever for cell recall at a given nProbe,
@@ -209,20 +166,20 @@ object VectorSoak {
       val cb2 = operators.Similarity.lloydRefine(e,
         operators.Similarity.firstNCodebook(e, NQ, nCells), NQ,
         iters = 3)
-      val cell = operators.Similarity.ivfTopKWith(e, cb2, NQ, P, 10)
+      val cell = operators.Similarity.ivfTopKWith(e, cb2, NQ, nProbe, 10)
       recallCell = recallOf(cell, bruteMain, nBruteMain)
       val memoKey = s"$soakDir|rerank"
       val adc = operators.Similarity.ivfPqTopKWith(e, cb2, NQ + nCells,
-        NQ, P, 4, nCode, 10, cacheKey = memoKey)
+        NQ, nProbe, 4, nCode, 10, cacheKey = memoKey)
       recallAdc = recallOf(adc, bruteMain, nBruteMain)
       val rer = operators.Similarity.ivfPqRerankWith(e, cb2,
-        NQ + nCells, NQ, P, 4, nCode, nCand = nCand, k = 10,
+        NQ + nCells, NQ, nProbe, 4, nCode, nCand = nCand, k = 10,
         cacheKey = memoKey)
       val rows = rer.count()
       recallRerank = recallOf(rer, bruteMain, nBruteMain)
       (rows, Seq(rer.queryExecution.executedPlan))
     }
-    println(s"""{"metric":"vector_rerank","n_probe":$P,""" +
+    println(s"""{"metric":"vector_rerank","n_probe":$nProbe,""" +
       s""""n_cells":$nCells,"n_code":$nCode,"n_cand":$nCand,""" +
       s""""recall_cell_ceiling":$recallCell,"recall_adc":$recallAdc,""" +
       s""""recall_rerank":$recallRerank}""")
@@ -289,7 +246,7 @@ object VectorSoak {
     // Gate calibration (ADVICE r14): the 0.3 floors (and the
     // recallRecompact >= recallPost ordering below) were validated at
     // the DEFAULT amplification only (~0.40 pre / ~0.49 post
-    // measured); a different SPARK_GRAFT_VECTOR_COPIES can shift
+    // measured); a different SPARK_GRAFT_VECTOR_N can shift
     // stale-book recall below the floor or let retraining tie at equal
     // nProbe — a spurious failure at non-default n is a calibration
     // artifact, not a regression. Re-baseline the floors when changing
@@ -371,6 +328,6 @@ object VectorSoak {
       .foreach(_.unpersist(blocking = false))
     operators.Dedup.clearCaches(spark)
     spark.stop()
-    ChainSoak.deleteRecursively(new java.io.File(soakDir))
+    deleteRecursively(new java.io.File(soakDir))
   }
 }

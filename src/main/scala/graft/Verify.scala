@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,22 +13,7 @@ object Verify {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI ON is the default since round 5 — the recommended
-      // production mode, and the whole declared surface is ANSI-clean
-      // (ANSI.md; coercion queries use try_cast/PERMISSIVE from_json
-      // explicitly, so reference pre-ANSI semantics are preserved
-      // per-expression, not per-session: spark_consumer_kafka.py:65-74).
-      // SPARK_GRAFT_ANSI=false is the reference-compat escape hatch.
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(4))
     new java.io.File(outDir).mkdirs()
     // A failed query must be a VISIBLE red row, not a silent absence:
     // round 7's 23 loader-broken queries surfaced in the driver's

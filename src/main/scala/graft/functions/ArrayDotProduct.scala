@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -75,94 +74,4 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): ArrayDotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration of graft's native functions into a session's function
-  * registry, so queries reach them through `expr("array_dot(a, b)")` —
-  * the stable public route across Spark 4's Column API changes.
-  */
-object GraftFunctions {
-
-  // Idempotency guard: registration is called from every query entry
-  // point (Tables.t), and re-registering logs a replacement WARN per
-  // function per call otherwise.
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      registered.add(spark)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "array_dot",
-        exprs => ArrayDotProduct(exprs.head, exprs(1)),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash63",
-        exprs => SimHash63(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_bands16x2",
-        exprs => MinHashBands(exprs.head, 16, 2),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingles3",
-        exprs => Shingles3(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "norm_text",
-        exprs => NormText(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "winnow_fps",
-        exprs => WinnowFps(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "winnow_fps64",
-        exprs => WinnowFps64(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "norm_tokens",
-        exprs => NormTokens(exprs.head),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "scrub_spans64",
-        exprs => ScrubSpans64(exprs.head, exprs(1)),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bpe_merge",
-        exprs => BpeMergePass(exprs.head, exprs(1), exprs(2)),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pair_expand_sz",
-        exprs => PairExpandSz(exprs.head,
-          litInt(exprs(1), "pair_expand_sz p"),
-          litInt(exprs(2), "pair_expand_sz q")),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pair_expand_cap",
-        exprs => PairExpandCap(exprs.head,
-          litInt(exprs(1), "pair_expand_cap cap")),
-        "built-in")
-    }
-  }
-
-  /** Fold a literal int argument at registration time (the generator's
-    * thresholds are plan constants, not per-row expressions). Shared
-    * with GraftExtensions.
-    */
-  private[functions] def litIntArg(e: Expression, what: String): Int =
-    litInt(e, what)
-
-  private def litInt(e: Expression, what: String): Int = e match {
-    case lit if lit.foldable =>
-      lit.eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"$what must be an integer literal, got $other")
-      }
-    case _ => throw new IllegalArgumentException(
-      s"$what must be a literal")
-  }
 }

@@ -74,14 +74,12 @@ object Bpe {
     * parity-pinned against DuckDB's string_split (BpeSpec).
     */
   private def initialVocab(docs: DataFrame,
-      cacheKey: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+      cacheKey: String): DataFrame =
     Pipeline.docTerms(docs, cacheKey)
       .groupBy(col("term").as("word"))
       .agg(sum("tf").as("freq"))
       .withColumn("syms", expr("split(word, '')"))
       .localCheckpoint()
-  }
 
   /** Adjacent-pair counts over the current vocab, ranked by the total
     * tie-break (count DESC, then (a, b)) — the shared argmax plan of

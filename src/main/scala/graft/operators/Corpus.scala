@@ -164,7 +164,6 @@ object Corpus {
     */
   def stopwordScrub(docs: DataFrame, dfFrac: Double, cap: Int,
       cacheKey: String = ""): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val terms = Pipeline.docTerms(docs, cacheKey)
     val dfTerm = terms.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -284,7 +283,6 @@ object Corpus {
   def docFps(docs: DataFrame, cacheKey: String = ""): DataFrame =
     Memo.memo("span_fps", docs.sparkSession, cacheKey,
       persistIt = true) {
-      graft.functions.GraftFunctions.register(docs.sparkSession)
       val p = docs.sparkSession.sparkContext.defaultParallelism
       docs.repartition(p, col("doc_id"))
         .select(col("doc_id"),
@@ -474,7 +472,6 @@ object Corpus {
   }
 
   def spanScrub(docs: DataFrame, fps: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val stale = staleFpLists(fps)
     docs
       .filter(col("text").isNotNull)
@@ -500,7 +497,6 @@ object Corpus {
     * pass through byte-identical.
     */
   def spanScrubDocs(docs: DataFrame, fps: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val stale = staleFpLists(fps)
     docs
       .filter(col("text").isNotNull)
@@ -660,7 +656,6 @@ object Corpus {
   def docBigrams(docs: DataFrame, cacheKey: String = ""): DataFrame =
     Memo.memo("bigrams", docs.sparkSession, cacheKey,
       persistIt = true) {
-      graft.functions.GraftFunctions.register(docs.sparkSession)
       val p = docs.sparkSession.sparkContext.defaultParallelism
       docs
         .repartition(p, col("doc_id"))
@@ -701,11 +696,9 @@ object Corpus {
     * src_b` keeps one deterministic orientation per pair.
     */
   def sourceOverlap(docs: DataFrame,
-      keyExpr: String = s"md5(${TextOps.normS})"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+      keyExpr: String = s"md5(${TextOps.normS})"): DataFrame =
     sourceOverlapPairs(
       docs.select(expr(keyExpr).as("h"), col("source")))
-  }
 
   /** [[sourceOverlap]] over a pre-built (h, source) digest frame —
     * callers comparing several digest granularities feed slices of
@@ -730,7 +723,6 @@ object Corpus {
   def sourceDigests(docs: DataFrame, cacheKey: String = ""): DataFrame =
     Memo.memo("src_digests", docs.sparkSession, cacheKey,
       persistIt = true) {
-      graft.functions.GraftFunctions.register(docs.sparkSession)
       docs.select(expr(TextOps.normS).as("norm"), col("source"))
         .select(expr("md5(norm)").as("hf"),
           expr("md5(substring(norm, 1, 60))").as("hp"),

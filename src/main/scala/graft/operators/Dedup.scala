@@ -75,7 +75,6 @@ object Dedup {
     */
   def docShingles(df: DataFrame, cacheKey: String = ""): DataFrame =
     Memo.memo("shingles", df.sparkSession, cacheKey, persistIt = true) {
-      graft.functions.GraftFunctions.register(df.sparkSession)
       val p = df.sparkSession.sparkContext.defaultParallelism
       df.repartition(p, col("doc_id"))
         .withColumn("toks", expr(toksS))
@@ -101,7 +100,6 @@ object Dedup {
     * Output: (doc_id, bow_key, kept) for every document.
     */
   def bowDedup(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val keyed = docs.select(col("doc_id"),
       expr("md5(concat_ws(' ', array_sort(array_distinct(" +
         "coalesce(norm_tokens(text), " +
@@ -181,7 +179,6 @@ object Dedup {
 
   private def nearDupPairsUncached(docs: DataFrame, p: Int,
       q: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val inv = docs.select(col("doc_id"), size(col("sh")).as("sz"),
       explode(col("sh")).as("h"))
     val grouped = inv.groupBy("h")
@@ -232,7 +229,6 @@ object Dedup {
     */
   private[graft] def minhashPairsPlan(docs: DataFrame, p: Int, q: Int,
       cacheKey: String = ""): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val cand = bandSignatures(docs, cacheKey)
       .groupBy("band", "sig")
       .agg(collect_list(col("doc_id")).as("ids"))
@@ -258,7 +254,6 @@ object Dedup {
     // materialization, and there is no owner to release it.
     Memo.memo("bands", docs.sparkSession, cacheKey,
       persistIt = cacheKey.nonEmpty) {
-      graft.functions.GraftFunctions.register(docs.sparkSession)
       // sh is already array<bigint> (hashed at shingling), so banding
       // consumes it directly — the old per-shingle
       // `transform(sh, s -> xxhash64(s))` interpreted-HOF pass is gone.
@@ -421,7 +416,6 @@ object Dedup {
       corpusBands: DataFrame = null,
       incomingBands: DataFrame = null,
       probeCap: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val nb0 = Option(incomingBands).getOrElse(bandSignatures(incoming))
       .withColumnRenamed("doc_id", "new_id")
     val doBroadcast = broadcastIncoming.getOrElse {
@@ -760,7 +754,6 @@ object Dedup {
     * bit-parity is not required).
     */
   def simhashFingerprints(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val p = df.sparkSession.sparkContext.defaultParallelism
     df.repartition(p, col("doc_id"))
       .withColumn("toks", expr(toksS))

@@ -122,7 +122,6 @@ object Pipeline {
     */
   def docLengths(docs: DataFrame, cacheKey: String = ""): DataFrame =
     Memo.memo("doclen", docs.sparkSession, cacheKey, persistIt = true) {
-      graft.functions.GraftFunctions.register(docs.sparkSession)
       docs.withColumn("toks", expr(toksS))
         .select(col("doc_id"), col("lang"), size(col("toks")).as("n_tok"))
     }
@@ -282,7 +281,6 @@ object Pipeline {
     * StreamOps.streamingDocTerms, where each batch is read once).
     */
   def docTermsPlan(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val p = docs.sparkSession.sparkContext.defaultParallelism
     docs
       .repartition(p, col("doc_id"))
@@ -503,7 +501,6 @@ object Pipeline {
     */
   def docQuality(docs: DataFrame, cacheKey: String = ""): DataFrame =
     Memo.memo("quality", docs.sparkSession, cacheKey, persistIt = true) {
-      graft.functions.GraftFunctions.register(docs.sparkSession)
       docs.withColumn("toks", expr(toksS))
         .select(col("doc_id"), col("lang"), col("n_chars"),
           expr("size(toks)").as("n_tokens"),

@@ -30,8 +30,7 @@ object Similarity {
     * silently dropping or poisoning rankings. Callers with legitimately
     * zero embeddings must quarantine them upstream.
     */
-  def prepared(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
+  def prepared(df: DataFrame): DataFrame =
     df.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", expr("sqrt(array_dot(v, v))"))
@@ -40,7 +39,6 @@ object Similarity {
           lit("zero- or NaN-norm embedding rejected: vec_id="),
           col("vec_id").cast("string"),
           lit(" (failed embedder output — quarantine upstream)")))))
-  }
 
   private def cosCol = expr("array_dot(qv, cv) / (qn * cn)")
 
@@ -544,7 +542,6 @@ object Similarity {
 
   private def ivfStoreDriftOver(spark: SparkSession, path: String,
       vectors: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Bounded driver-local load, as on every probe path: a corpus-
     // sized file at the codebook path must fail loudly here too, not
     // broadcast into the anti-join.
@@ -1545,7 +1542,6 @@ object Similarity {
   private def pqStoreSearch(spark: SparkSession, path: String,
       queries: DataFrame, cent: DataFrame, cells: Seq[Int],
       nProbe: Int, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cb = spark.read.parquet(s"$path/subcodebook")
     val d = cb.agg((max("m") + 1).cast("int").as("ns"),
       (max("code") + 1).cast("int").as("nc")).head()
@@ -1844,7 +1840,6 @@ object Similarity {
             s"join is quadratic per block; at scale use " +
             s"semDedupTrained or the LSH bucket path instead")
     }
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val e = df.select(col("vec_id"), col(blockKey).as("blk"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", expr("sqrt(array_dot(v, v))"))

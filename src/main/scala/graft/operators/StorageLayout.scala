@@ -237,25 +237,20 @@ object StorageLayout {
     * a one-element array.
     */
   def termManifest(spark: SparkSession, path: String,
-      tokensExpr: String, buckets: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+      tokensExpr: String, buckets: Int): DataFrame =
     termManifestOf(spark.read.parquet(path), tokensExpr, buckets)
-  }
 
   /** [[termManifest]] over an already-resolved frame (see
     * [[statsManifestOf]] — the snapshot-scoped variant for manifested
-    * stores). Caller registers graft functions if `tokensExpr` needs
-    * them.
+    * stores).
     */
   def termManifestOf(df: DataFrame, tokensExpr: String,
-      buckets: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
+      buckets: Int): DataFrame =
     df.select(input_file_name().as("file"),
         explode(expr(tokensExpr)).as("term"))
       .select(col("file"),
         pmod(xxhash64(col("term")), lit(buckets.toLong)).as("b"))
       .distinct()
-  }
 
   /** The bucket a term probes — the same hash [[termManifest]] wrote,
     * evaluated DRIVER-SIDE on the literal (Catalyst XxHash64 with the
@@ -290,7 +285,6 @@ object StorageLayout {
   def termSkippingRead(spark: SparkSession, path: String,
       manifest: DataFrame, term: String, tokensExpr: String,
       buckets: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val files = filesWithTerm(spark, manifest, term, buckets)
     val base =
       if (files.isEmpty) spark.read.parquet(path).limit(0)

@@ -15,7 +15,7 @@ object TextOps {
 
   /** Regex/HOF formulations — the definitional baseline. The declared
     * queries use the native single-pass expressions below instead
-    * (graft.functions.NormText/NormTokens, registered via Tables.t);
+    * (graft.functions.NormText/NormTokens, installed by GraftConf.tune);
     * TextOpsSpec asserts the two formulations are equal on the corpus
     * and on adversarial inputs, so swapping was output-neutral.
     */

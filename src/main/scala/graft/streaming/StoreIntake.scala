@@ -574,11 +574,13 @@ object StoreIntake {
         // fixture epoch of ~350 rows, each paying a task commit, an
         // individual ledger rename, an intent line, and a manifest
         // list entry. Hash-clustering on `source` bounds an epoch to
-        // one file per source at any input width; at 100 TB per-source
-        // file size is then governed by maxRecordsPerFile / a
-        // REBALANCE-style split, while the small-files growth the
-        // per-source compaction exists to fold stays bounded at the
-        // source, not repaired after.
+        // one file per source at any input width, so the small-files
+        // growth the per-source compaction exists to fold stays bounded
+        // at the source, not repaired after. The cost is one write task
+        // per source: at scale a hot source serializes through a single
+        // writer, and a REBALANCE-style split of large sources is the
+        // production lever — deliberately not wired at fixture scale,
+        // where every source's epoch is a few hundred rows.
         batch.repartition(col("source"))
           .write.partitionBy("source").mode("overwrite")
           .parquet(stageDir)
@@ -680,7 +682,6 @@ object StoreIntake {
       scope: String, buckets: Int = 16)(batch: DataFrame,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     if (batch.isEmpty) {
       if (!epochApplied(spark, tablePath, scope, batchId))
         appendEpoch(spark, tablePath, scope, batchId)(_ => ()): Unit

@@ -66,7 +66,6 @@ object StreamOps {
       corpusBands: DataFrame = null)(
       onMatches: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
     // Band the static corpus ONCE (persisted for the life of the
     // session; callers wanting earlier release pass their own
     // corpusBands — a memoized Dedup.bandSignatures slice or a

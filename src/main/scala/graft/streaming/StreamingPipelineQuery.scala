@@ -73,26 +73,23 @@ object StreamingPipelineQuery {
     * cannot observe a replay's transient conf (the mutate-and-restore
     * form this replaces was safe only under sequential runners —
     * VERDICT r14 carried minor). Child sessions inherit the
-    * builder-level confs (ANSI, timezone, RocksDB provider), so only
-    * the replay-specific pairs are passed here.
+    * builder-level confs (ANSI, timezone, RocksDB provider) and the
+    * session extensions (the graft functions), so only the
+    * replay-specific pairs are passed here.
     */
   private def withReplaySession[A](spark: SparkSession,
       confs: (String, String)*)(body: SparkSession => A): A = {
     val s = spark.newSession()
-    graft.functions.GraftFunctions.register(s)
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     body(s)
   }
 
-  /** Replay state-partition width. `n` is the per-query local default
+  /** Replay state-partition width, fixture-only: every replay runs at 4
     * (see the scaladoc above — the production lever is sized UP with
-    * the key space); SPARK_GRAFT_REPLAY_SHUFFLE overrides every replay
-    * at once for width A/Bs (r18 measurement protocol).
+    * the key space).
     */
-  private def shuffleN(n: Int): (String, String) =
-    "spark.sql.shuffle.partitions" ->
-      sys.env.get("SPARK_GRAFT_REPLAY_SHUFFLE")
-        .flatMap(_.toIntOption).map(_.toString).getOrElse(n.toString)
+  private val ReplayWidth: (String, String) =
+    "spark.sql.shuffle.partitions" -> "4"
 
   /** The session default is RocksDB (GraftConf — transformWithState
     * requires it), but the window-agg and join state here is KB-sized
@@ -142,7 +139,7 @@ object StreamingPipelineQuery {
     * upserted store converges identically — oracle hash-gated.
     */
   private def run(spark0: SparkSession, dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4), HdfsStateStore,
+    withReplaySession(spark0, ReplayWidth, HdfsStateStore,
       NoDataBatchesOff) { spark =>
     import spark.implicits._
     val rows = boundedFeed(Tables.t(spark, dir, "events").as[E]
@@ -191,7 +188,7 @@ object StreamingPipelineQuery {
     */
   private def runQuantiles(spark0: SparkSession,
       dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4)) { spark =>
+    withReplaySession(spark0, ReplayWidth) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rows = boundedFeed(Tables.t(spark, dir, "documents")
@@ -242,7 +239,7 @@ object StreamingPipelineQuery {
     * oracle agree exactly in the HLL coupon regime the fixtures sit in.
     */
   private def runDistinct(spark0: SparkSession, dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4)) { spark =>
+    withReplaySession(spark0, ReplayWidth) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rows = boundedFeed(Tables.t(spark, dir, "documents")
@@ -254,7 +251,6 @@ object StreamingPipelineQuery {
     val source = MemoryStream[(Long, String, String)](spark)
 
     def drain(): Unit = {
-      graft.functions.GraftFunctions.register(spark)
       val terms = source.toDF().toDF("doc_id", "source", "text")
         .select(col("source"),
           explode(expr("norm_tokens(text)")).as("term"))
@@ -305,7 +301,7 @@ object StreamingPipelineQuery {
     * drop a match. Digest-identical, oracle-gated.
     */
   private def runJoin(spark0: SparkSession, dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4), HdfsStateStore,
+    withReplaySession(spark0, ReplayWidth, HdfsStateStore,
       NoDataBatchesOff) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -372,7 +368,7 @@ object StreamingPipelineQuery {
     */
   private def runZScore(spark0: SparkSession,
       dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4)) { spark =>
+    withReplaySession(spark0, ReplayWidth) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rows = boundedFeed(Tables.t(spark, dir, "events")
@@ -426,10 +422,9 @@ object StreamingPipelineQuery {
     * store equals the batch min-per-key rule, which is the oracle.
     */
   private def runDedup(spark0: SparkSession, dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4)) { spark =>
+    withReplaySession(spark0, ReplayWidth) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val rows = boundedFeed(Tables.t(spark, dir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
@@ -497,10 +492,9 @@ object StreamingPipelineQuery {
     */
   private def runDedupReplica(spark0: SparkSession,
       dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4)) { spark =>
+    withReplaySession(spark0, ReplayWidth) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val rows = boundedFeed(Tables.t(spark, dir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
@@ -612,16 +606,19 @@ object StreamingPipelineQuery {
     * and the store-side min re-canonicalizes every one of them against
     * the resident value. Green = eviction + recurrence + restart
     * replay + epoch fold still converge to the batch
-    * keep-lowest-doc_id rule. TTL is env-tunable
-    * (SPARK_GRAFT_KEEPER_TTL_MS) for slow hosts where the default
-    * 200 ms window could race the drain (ADVICE r14).
+    * keep-lowest-doc_id rule. See [[KeeperTtl]] for the TTL.
     */
+  /** Keeper TTL for streaming_dedup_bounded, fixture-only: 200 ms keeps
+    * the three-execution replay short, and the sleeps between executions
+    * are 5× the TTL, so eviction never races the drain.
+    */
+  private val KeeperTtl = java.time.Duration.ofMillis(200)
+
   private def runDedupBounded(spark0: SparkSession,
       dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4), NoDataBatchesOff) { spark =>
+    withReplaySession(spark0, ReplayWidth, NoDataBatchesOff) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val rows = boundedFeed(Tables.t(spark, dir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
@@ -634,9 +631,6 @@ object StreamingPipelineQuery {
     val store = new EpochMinStore(s"$work/store", Seq("h"),
       scope = "keeper", compactOver = 2)
     val source = MemoryStream[(Long, String)](spark)
-    val ttl = java.time.Duration.ofMillis(
-      sys.env.get("SPARK_GRAFT_KEEPER_TTL_MS")
-        .flatMap(_.toLongOption).getOrElse(200L))
     val saltedEmissions = new java.util.concurrent.atomic.AtomicLong
 
     def drain(): Unit = {
@@ -644,7 +638,7 @@ object StreamingPipelineQuery {
         .selectExpr("md5(substring(norm_text(text), 1, 60)) AS h",
           "doc_id AS docId")
         .as[StatefulOps.DocKey]
-      val q = StatefulOps.canonicalKeepersBounded(keyed, ttl)
+      val q = StatefulOps.canonicalKeepersBounded(keyed, KeeperTtl)
         .toDF()
         .writeStream
         .outputMode("update")
@@ -661,10 +655,10 @@ object StreamingPipelineQuery {
 
     source.addData(rows.take(split): _*)
     drain()
-    Thread.sleep(ttl.toMillis * 5)
+    Thread.sleep(KeeperTtl.toMillis * 5)
     source.addData(rows.drop(split): _*)
     drain() // restart; execution-1 window expired
-    Thread.sleep(ttl.toMillis * 5)
+    Thread.sleep(KeeperTtl.toMillis * 5)
     // Re-deliver execution 1's documents under salted ids: duplicates
     // of COLD keys, arriving after their election state expired.
     source.addData(rows.take(split).map { case (id, txt) =>
@@ -733,15 +727,20 @@ object StreamingPipelineQuery {
     // re-election still happen; the min-merge store is eviction-
     // timing-agnostic by construction (canonicalKeepersBounded's
     // safety argument), and the oracle hash gates the converged rows.
-    withReplaySession(spark0, shuffleN(4), NoDataBatchesOff) { spark =>
+    // The FINAL execution has no N+1: its last timers never fire and
+    // below-watermark state stays in the checkpoint. That is harmless
+    // because nothing re-delivers after it and the query's output is
+    // the converged min-merge store, not the operator's state — an
+    // unfired eviction can only withhold a re-election, never change
+    // a key's minimum.
+    withReplaySession(spark0, ReplayWidth, NoDataBatchesOff) { spark =>
     // This replay right-sized to 4 a round before the others: FOUR
     // AvailableNow executions pay RocksDB load/commit per (partition ×
     // batch) with timer column families on top. Since r18 every replay
-    // runs at 4 (see shuffleN's re-measurement note); the production
+    // runs at 4 (see ReplayWidth's re-measurement note); the production
     // lever still scales partitions UP with the key space.
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val rows = boundedFeed(Tables.t(spark, dir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
@@ -847,7 +846,7 @@ object StreamingPipelineQuery {
     * fold reproduces a single batch tokenize exactly.
     */
   private def runIntake(spark0: SparkSession, dir: String): DataFrame =
-    withReplaySession(spark0, shuffleN(4)) { spark =>
+    withReplaySession(spark0, ReplayWidth) { spark =>
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val docs = boundedFeed(Tables.t(spark, dir, "documents")

@@ -14,15 +14,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * at fixture scale so a regression (an operator rewrite that sneaks
   * in a corpus shuffle-join, a whole-language window, or a
   * corpus-sized broadcast) goes red in the unit suite instead of
-  * surfacing rounds later in a soak run. Uses ChainSoak's own
-  * tree-walk helpers (planNodes descends AQE stages and stops at cache
-  * boundaries — string checks re-see upstream plans inside Spark 4's
-  * printed InMemoryRelations, which is exactly the false-positive
-  * this spec must not have).
+  * surfacing rounds later in a soak run. Uses the soaks' own
+  * tree-walk helpers in Harness (planNodes descends AQE stages and
+  * stops at cache boundaries — string checks re-see upstream plans
+  * inside Spark 4's printed InMemoryRelations, which is exactly the
+  * false-positive this spec must not have).
   *
-  * The amplified corpus mirrors ChainSoak's mixed profile in
-  * miniature: 4 copies per base doc — 2 verbatim (an exact-dup pair
-  * per base doc) and 2 salted with length-proportional distinct
+  * The amplified corpus is ChainSoak's mixed profile
+  * (Harness.amplifiedDocs) in miniature: 4 copies per base doc — 2
+  * verbatim (an exact-dup pair per base doc) and 2 salted with
+  * length-proportional distinct
   * tokens (Jaccard vs base ≈ 0.5: candidate-generating hard negatives
   * that must SURVIVE dedup).
   */
@@ -35,28 +36,19 @@ class ChainInvariantsSpec extends AnyFunSuite {
 
   private lazy val docs: DataFrame = {
     val base = Tables.t(spark, "/root/testdata/sf0.001", "documents")
-      .select("doc_id", "text", "lang", "source")
-    val salted = "concat(text, ' ', concat_ws(' ', " +
-      "transform(sequence(1, greatest(8, length(text) div 8)), " +
-      "i -> hex(hash(doc_id, i)))))"
-    (0 until N).map { k =>
-      val c = base.withColumn("doc_id", col("doc_id") + lit(k * 10000000L))
-      if (k < Dup) c else c.withColumn("text", expr(salted))
-    }.reduce(_ unionByName _)
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .persist()
+    Harness.amplifiedDocs(base, N, Dup).persist()
   }
 
   private def nodes(df: DataFrame) =
-    ChainSoak.planNodes(df.queryExecution.executedPlan)
+    Harness.planNodes(df.queryExecution.executedPlan)
 
   private def assertBounded(df: DataFrame, name: String): Unit = {
     val ns = nodes(df)
     assert(!ns.exists(n => n.isInstanceOf[CartesianProductExec] ||
       n.isInstanceOf[BroadcastNestedLoopJoinExec]),
       s"$name planned an unbounded join")
-    val big = ChainSoak.broadcastSizes(df.queryExecution.executedPlan)
-      .filter(_ > ChainSoak.MaxBroadcastBytes)
+    val big = Harness.broadcastSizes(df.queryExecution.executedPlan)
+      .filter(_ > Harness.MaxBroadcastBytes)
     assert(big.isEmpty, s"$name broadcast over the ceiling: $big bytes")
   }
 
@@ -108,7 +100,7 @@ class ChainInvariantsSpec extends AnyFunSuite {
     val redacted = Pipeline.redactPii(kept)
     val redQe = redacted.queryExecution
     redQe.toRdd.count()
-    assert(!ChainSoak.planNodes(redQe.executedPlan)
+    assert(!Harness.planNodes(redQe.executedPlan)
       .exists(_.isInstanceOf[ShuffleExchangeLike]),
       "pii scrub must stay per-row")
 
@@ -119,7 +111,7 @@ class ChainInvariantsSpec extends AnyFunSuite {
     val selQe = selected.queryExecution
     val nSel = selQe.toRdd.count()
     assert(nSel > 0)
-    val selNs = ChainSoak.planNodes(selQe.executedPlan)
+    val selNs = Harness.planNodes(selQe.executedPlan)
     assert(!selNs.exists(_.isInstanceOf[SortMergeJoinExec]),
       "budget selection must not shuffle-join the corpus")
     assert(!selNs.exists {
@@ -135,7 +127,7 @@ class ChainInvariantsSpec extends AnyFunSuite {
     val sampled = Pipeline.mixtureSample(selCached)
     val samQe = sampled.queryExecution
     samQe.toRdd.count()
-    val samNs = ChainSoak.planNodes(samQe.executedPlan)
+    val samNs = Harness.planNodes(samQe.executedPlan)
     assert(!samNs.exists(_.isInstanceOf[SortMergeJoinExec]),
       "mixture must broadcast its weights")
     assert(samNs.exists {

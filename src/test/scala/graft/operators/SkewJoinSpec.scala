@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{ChainSoak, TestSpark}
+import graft.{Harness, TestSpark}
 import org.apache.spark.sql.execution.PartialReducerPartitionSpec
 import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -79,7 +79,7 @@ class SkewJoinSpec extends AnyFunSuite {
       val joined = left.join(right, "k")
       joined.queryExecution.toRdd.count()
       val plan = joined.queryExecution.executedPlan
-      val ns = ChainSoak.planNodes(plan)
+      val ns = Harness.planNodes(plan)
       val smj = ns.collect { case j: SortMergeJoinExec => j }
       assert(smj.nonEmpty, s"expected a sort-merge join:\n$plan")
       assert(smj.exists(_.isSkewJoin),
@@ -98,7 +98,7 @@ class SkewJoinSpec extends AnyFunSuite {
       val t1 = System.nanoTime()
       val (n2, s2, plan2) = run()
       val noSkewSec = (System.nanoTime() - t1) / 1e9
-      assert(!ChainSoak.planNodes(plan2)
+      assert(!Harness.planNodes(plan2)
         .collect { case j: SortMergeJoinExec => j }.exists(_.isSkewJoin))
       assert(n1 == n2 && s1 == s2,
         s"skew split changed the result: ($n1,$s1) vs ($n2,$s2)")

@@ -34,36 +34,42 @@ class CheckpointChangelogSpec extends AnyFunSuite {
     import spark.implicits._
 
     // The conf must be ON in the session under test — if GraftConf's
-    // key ever drifts, this read fails the spec by name instead of the
-    // file assertion failing obscurely.
-    assert(spark.conf.get("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled") == "true")
+    // key ever drifts (or is unset), this check fails the spec by name
+    // instead of the file assertion failing obscurely.
+    val key = "spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled"
+    assert(spark.conf.getOption(key).contains("true"),
+      s"$key is ${spark.conf.getOption(key)} in the GraftConf session")
 
     val ckpt = Files.createTempDirectory("graft-ckpt-changelog")
-    val source = MemoryStream[StatefulOps.DocKey](spark)
-    // Feed BEFORE start: AvailableNow pins its end offsets at query
-    // start, so later addData would leave the run with zero batches
-    // (and this spec would fail vacuously on an empty state dir).
-    source.addData(StatefulOps.DocKey("k1", 7L),
-      StatefulOps.DocKey("k2", 3L))
-    val q = StatefulOps.canonicalKeepers(source.toDS())
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[
-          StatefulOps.Keeper], _: Long) =>
-        b.collect(): Unit
-      }
-      .start()
-    q.awaitTermination()
+    try {
+      val source = MemoryStream[StatefulOps.DocKey](spark)
+      // Feed BEFORE start: AvailableNow pins its end offsets at query
+      // start, so later addData would leave the run with zero batches
+      // (and this spec would fail vacuously on an empty state dir).
+      source.addData(StatefulOps.DocKey("k1", 7L),
+        StatefulOps.DocKey("k2", 3L))
+      val q = StatefulOps.canonicalKeepers(source.toDS())
+        .writeStream
+        .outputMode("update")
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[
+            StatefulOps.Keeper], _: Long) =>
+          b.collect(): Unit
+        }
+        .start()
+      q.awaitTermination()
 
-    val state = filesUnder(ckpt.resolve("state"))
-    val changelogs = state.filter(_.endsWith(".changelog"))
-    assert(changelogs.nonEmpty,
-      s"no .changelog files under ${ckpt.resolve("state")} — commits " +
-        "are uploading full snapshots; the changelogCheckpointing " +
-        s"conf is not reaching RocksDB (state files: " +
-        s"${state.take(10).mkString(", ")})")
+      val state = filesUnder(ckpt.resolve("state"))
+      val changelogs = state.filter(_.endsWith(".changelog"))
+      assert(changelogs.nonEmpty,
+        s"no .changelog files under ${ckpt.resolve("state")} — commits " +
+          "are uploading full snapshots; the changelogCheckpointing " +
+          s"conf is not reaching RocksDB (state files: " +
+          s"${state.take(10).mkString(", ")})")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
+    }
   }
 }
