@@ -62,4 +62,12 @@ object GraftConf {
       // the first read instead of order-dependent on which table
       // loaded first).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Local checkpoint, store and sink files go through NioLocalFs:
+      // the stock local filesystem without the chmod/readlink forks it
+      // makes when libhadoop is absent (DEPLOY.md §1). `file:` only;
+      // checksums stay on.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
 }

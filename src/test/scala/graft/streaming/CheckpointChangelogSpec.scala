@@ -1,8 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.net.URI
+import java.nio.file.{Files, Path, Paths}
 
-import graft.TestSpark
+import graft.{NioLocalFileSystem, NioLocalFs, TestSpark}
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * batch of a transformWithState query on the GraftConf session, the
   * checkpoint's state directory must contain `<version>.changelog`
   * files — the O(batch) commit artifact — not only `.zip` full
-  * snapshots.
+  * snapshots. The same batch pins the checkpoint's verification: the
+  * session's `file:` scheme resolves to NioLocalFs in both Hadoop APIs,
+  * and Spark's and Hadoop's checksum files are both still written.
   */
 class CheckpointChangelogSpec extends AnyFunSuite {
 
@@ -40,6 +44,16 @@ class CheckpointChangelogSpec extends AnyFunSuite {
       "changelogCheckpointing.enabled"
     assert(spark.conf.getOption(key).contains("true"),
       s"$key is ${spark.conf.getOption(key)} in the GraftConf session")
+
+    val checksums = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    assert(spark.conf.getOption(checksums).exists(_ != "false"),
+      s"$checksums is ${spark.conf.getOption(checksums)} in the GraftConf " +
+        "session")
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val local = URI.create("file:///")
+    assert(FileSystem.get(local, hadoopConf).isInstanceOf[NioLocalFileSystem])
+    assert(FileContext.getFileContext(local, hadoopConf).getDefaultFileSystem
+      .isInstanceOf[NioLocalFs])
 
     val ckpt = Files.createTempDirectory("graft-ckpt-changelog")
     try {
@@ -68,6 +82,16 @@ class CheckpointChangelogSpec extends AnyFunSuite {
           "are uploading full snapshots; the changelogCheckpointing " +
           s"conf is not reaching RocksDB (state files: " +
           s"${state.take(10).mkString(", ")})")
+
+      // NioLocalFs makes checkpoint I/O cheaper without dropping any
+      // verification: every changelog keeps both Spark's checksum file
+      // (`<v>.changelog.crc`) and Hadoop's (`.<v>.changelog.crc`).
+      def name(p: String): String = Paths.get(p).getFileName.toString
+      val names = state.map(name).toSet
+      changelogs.map(name).foreach { c =>
+        assert(names(s"$c.crc"), s"no Spark checksum file for $c")
+        assert(names(s".$c.crc"), s"no Hadoop checksum file for $c")
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
     }

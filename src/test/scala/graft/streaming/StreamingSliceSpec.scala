@@ -1,8 +1,13 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import graft.TestSpark
+import scala.jdk.CollectionConverters._
+
+import graft.{Harness, TestSpark}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -88,5 +93,64 @@ class StreamingSliceSpec extends AnyFunSuite {
     assert(nz._1 == 5120000L)
     assert(nz._2 == "Oceania")
     assert(nz._3 == BigDecimal("2.9297")) // 15 * 1e6 / 5120000 = 2.9296875
+  }
+
+  test("a trigger of 40 source blocks parses in at most one task per " +
+    "core and sinks the rows the batch transform gives") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+
+    val blocks = (0 until 40).map { b =>
+      val day = f"2021-03-${1 + b % 3}%02d"
+      Seq(row(day, "New Zealand", b, 100 + b),
+        row(day, if (b % 2 == 0) "India" else "Germany", 2 * b, 1000 + b)) ++
+        (if (b % 10 == 0) Seq("{not json") else Nil)
+    }
+    val dim = CovidStreamPipeline.countriesDim(spark)
+    def sorted(df: DataFrame): Seq[Row] =
+      df.drop("processing_time").orderBy("window_start", "location")
+        .collect().toSeq
+
+    val source = MemoryStream[String](spark)
+    blocks.foreach(b => source.addData(b))
+    val sink = new ConcurrentLinkedQueue[Row]()
+    val sourceStageTasks = new ConcurrentLinkedQueue[Integer]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "DataSourceRDD"))
+          sourceStageTasks.add(e.stageInfo.numTasks)
+    }
+    val ckpt = Files.createTempDirectory("graft-ckpt-width")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val query = CovidStreamPipeline.transform(dim)(source.toDF())
+        .writeStream
+        .outputMode("update")
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.collect().foreach(sink.add)
+        }
+        .start()
+      query.awaitTermination()
+      Harness.drainListeners(spark)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
+    }
+
+    val cores = spark.sparkContext.defaultParallelism
+    val widths = sourceStageTasks.asScala.map(_.intValue).toSeq
+    assert(cores < blocks.size)
+    assert(widths.nonEmpty, "no stage read the MemoryStream")
+    assert(widths.forall(_ <= cores),
+      s"source stages ran $widths tasks on $cores cores")
+
+    val batch = sorted(CovidStreamPipeline.transform(dim)(
+      blocks.flatten.toDF("value")))
+    val streamed = sorted(spark.createDataFrame(sink.asScala.toSeq.asJava,
+      sink.peek().schema))
+    assert(batch.size == 9)
+    assert(streamed == batch)
   }
 }
